@@ -24,20 +24,16 @@ def _noop_write(df) -> int:
 
 
 def _host_capacity(seconds: float = 2.0) -> float:
-    """Host-capacity probe (same burn as scripts/scaling_bench.py):
-    aggregate ops/s of an N-process pure-Python loop (N = machine
-    cores, capped at 32 to stay comparable with the scaling bench's
-    32-process probe), run in a clean subprocess (no Spark state).
-    This sandbox is co-tenant virtualized hardware whose capacity
-    oscillates on a ~10-minute timescale; the probe result is the
-    noise DENOMINATOR for cross-round comparisons of the absolute
-    throughput numbers below — a bench run taken in a degraded epoch
-    shows a proportionally lower probe value. Identical code across
-    rounds, so probe ratios == capacity ratios. Returns -1.0 (and
-    prints the reason to stderr) if the probe cannot run."""
+    """Host-capacity probe: aggregate ops/s of a pure-Python loop in
+    one process per core of the host, run in a clean subprocess (no
+    Spark state). This sandbox is co-tenant virtualized hardware whose
+    capacity oscillates on a ~10-minute timescale; a bench run taken in
+    a degraded epoch shows a proportionally lower probe value. Context
+    only: no timing is scaled by it. Returns -1.0 (and prints the
+    reason to stderr) if the probe cannot run."""
     import subprocess
 
-    procs = min(32, os.cpu_count() or 1)
+    procs = os.cpu_count() or 1
     code = r"""
 import multiprocessing as mp, time, sys
 def burn(sec):
@@ -178,14 +174,13 @@ BENCH_QUERIES = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     # The flagship extraction pipeline runs at a LARGE replication:
     # the pipeline carries ~2 s of fixed per-job overhead (synth stage
     # launch, window shuffle barrier, task-tail at 32 cores) that at
     # replicate=32 (160k docs, ~4 s) is half the wall clock and at
     # replicate=128 (640k docs) amortizes to ~15% — the sustained rate
-    # a long 100 TB run actually sees, and the number comparable to
-    # scripts/scaling_bench.py (also replicate>=128).
+    # a long 100 TB run actually sees.
     replicate_flagship = int(os.environ.get("SPARK_GRAFT_REPLICATE_FLAGSHIP", "128"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
 
@@ -206,24 +201,15 @@ def main() -> None:
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
 
-    # host noise denominator: capacity before any Spark work starts
+    # host capacity before any Spark work starts (context only)
     extras["host_ops_before"] = _host_capacity()
-    # Reference numerator for epoch normalization: the PINNED all-time
-    # clean-epoch capacity of the reference host (same constant as
-    # scripts/scaling_bench.py CLEAN_EPOCH_REF_OPS, same probe code).
-    # Deliberately NOT read from BENCH/scaling.json: that file's
-    # calibrations change whenever the scaling headline is replaced,
-    # which would silently change the normalization denominator between
-    # rounds — the exact confound the *_epoch_normalized fields exist
-    # to remove.
-    extras["host_ops_peak_ref"] = 5.35e8
 
     spark = get_spark(
         "bench",
         cores=cpus,
         shuffle_partitions=max(32, cpus),
-        # same GC shape scripts/scaling_bench.py measured most stable
-        # next to the Python worker pool
+        # throughput GC with capped GC threads: measured more stable
+        # next to the Python worker pool than G1's default thread count
         extra_java_options=(
             f"-XX:+UseParallelGC -XX:ParallelGCThreads={max(2, cpus // 4)}"
         ),
@@ -324,25 +310,6 @@ def main() -> None:
     extras["host_ops_after"] = _host_capacity()
 
     total = round(sum(timings.values()), 3)
-    # Epoch normalization (round-4 verdict item 5): the host's delivered
-    # capacity swings between rounds (co-tenant epochs, node
-    # migrations), so raw cross-round per-query deltas confound plan
-    # changes with epoch changes. Scale each timing by this run's
-    # capacity fraction (mean of the before/after probes over the
-    # all-time clean reference) to get the seconds the query would take
-    # at reference capacity — the number to compare across rounds.
-    # a failed probe returns the -1.0 sentinel — exclude it (it would
-    # halve or negate the normalized numbers)
-    probes = [
-        extras[k]
-        for k in ("host_ops_before", "host_ops_after")
-        if extras[k] > 0
-    ]
-    epoch_frac = (
-        (sum(probes) / len(probes)) / extras["host_ops_peak_ref"]
-        if probes
-        else None
-    )
     full = {
         "metric": "headline_queries_total_seconds",
         "value": total,
@@ -353,12 +320,6 @@ def main() -> None:
         "replicate_flagship": replicate_flagship,
         **extras,
     }
-    if epoch_frac is not None:
-        full["epoch_capacity_frac"] = round(epoch_frac, 3)
-        full["value_epoch_normalized"] = round(total * epoch_frac, 3)
-        full["queries_epoch_normalized"] = {
-            k: round(v * epoch_frac, 3) for k, v in timings.items()
-        }
     # Full per-query payload goes to a file; the driver's stdout capture
     # keeps only the LAST 2000 characters, so the final printed line must
     # be compact (round 3's official BENCH record lost its headline to a
@@ -398,12 +359,6 @@ def main() -> None:
         "bte_docs_per_sec": extras.get("bte_docs_per_sec"),
         "host_ops_before": extras.get("host_ops_before"),
         "host_ops_after": extras.get("host_ops_after"),
-        "epoch_capacity_frac": (
-            round(epoch_frac, 3) if epoch_frac is not None else None
-        ),
-        "value_epoch_normalized": (
-            round(total * epoch_frac, 3) if epoch_frac is not None else None
-        ),
         "full_results": str(out_path) if out_path else None,
     }
     line = json.dumps(compact)

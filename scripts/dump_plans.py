@@ -1,7 +1,8 @@
 """Dump formatted physical plans of the flagship pipeline and key
 queries to PLANS.md — the reviewable evidence that filters push down,
 dimensions broadcast, kernels see pruned columns, and no plan holds a
-cartesian product. Regenerate: python scripts/dump_plans.py"""
+cartesian product. Generated on demand, not committed:
+    python scripts/dump_plans.py"""
 
 from __future__ import annotations
 

@@ -1,5 +1,11 @@
-"""Package the engine as dist/engine.zip for spark-submit --py-files
-(BASELINE.json:6 'via spark-submit --py-files')."""
+"""Package the engine as a zip for spark-submit --py-files
+(BASELINE.json:6 'via spark-submit --py-files').
+
+    python scripts/make_pyfiles.py    # writes dist/engine.zip
+
+The archive is a build output, never committed; callers that need it
+elsewhere pass ``build`` an output path.
+"""
 
 from __future__ import annotations
 
@@ -7,12 +13,10 @@ import pathlib
 import zipfile
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
-DIST = ROOT / "dist"
 
 
-def build() -> pathlib.Path:
-    DIST.mkdir(exist_ok=True)
-    out = DIST / "engine.zip"
+def build(out: pathlib.Path) -> pathlib.Path:
+    out.parent.mkdir(parents=True, exist_ok=True)
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         for p in sorted((ROOT / "text_extraction_evaluation_spark").rglob("*.py")):
             z.write(p, p.relative_to(ROOT))
@@ -20,4 +24,4 @@ def build() -> pathlib.Path:
 
 
 if __name__ == "__main__":
-    print(build())
+    print(build(ROOT / "dist" / "engine.zip"))

@@ -6,9 +6,7 @@
 #      at sf0.01 (including rows-only pipeline entries),
 #   3. the full 174-entry registry sweep at sf0.01,
 #   4. the window-order audit (prints what the driver will sample).
-# Any failure stops the chain with a non-zero exit. Heavy Spark work —
-# do NOT run concurrently with a scaling-bench attempt (the bench's
-# contention sampler would rightly disqualify that run).
+# Any failure stops the chain with a non-zero exit.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 

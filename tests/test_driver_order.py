@@ -159,3 +159,13 @@ def test_fallback_used_only_without_records(monkeypatch):
     assert order[:4] == list(qmod.ROWS_ONLY_PIPELINE)
     assert "zz_new_entry" in order
     assert len(order) == len(set(order))
+
+
+def test_stray_correctness_files_are_ignored(tmp_path):
+    """Only CORRECTNESS_rNN.json names are official records: a stray
+    scratch file next to them must not be picked up as a round."""
+    (tmp_path / "CORRECTNESS_r01.json").write_text("{}")
+    (tmp_path / "CORRECTNESS_rscratch.json").write_text("{}")
+    assert _find_correctness_records(tmp_path) == [
+        tmp_path / "CORRECTNESS_r01.json"
+    ]

@@ -1,9 +1,6 @@
-"""Pure unit tests for the scaling-bench gate policies (no Spark, no
-subprocesses). The round-4 advisory found the keep-best policy resting
-on a false premise (interference was assumed to only bias the 8->32
-ratio DOWN, but contention overlapping the small leg inflates it);
-these tests pin the corrected semantics so a future edit cannot
-silently reintroduce it.
+"""Pure unit tests for the scaling check's stability gate (no Spark, no
+subprocesses): a run whose host-capacity probes swing, or whose N->4N
+pair ratios are physically implausible, must be rejected.
 """
 
 from __future__ import annotations
@@ -12,26 +9,15 @@ import importlib.util
 import pathlib
 
 _spec = importlib.util.spec_from_file_location(
-    "scaling_bench",
+    "scaling_check",
     pathlib.Path(__file__).resolve().parent.parent
     / "scripts"
-    / "scaling_bench.py",
+    / "scaling_check.py",
 )
-_sb = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(_sb)
+_sc = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(_sc)
 
-stability_reasons = _sb.stability_reasons
-headline_decision = _sb.headline_decision
-
-
-def _result(eligible=True, raw=0.9, pairs=3, contended=None, clean=None):
-    return {
-        "headline_eligible": eligible,
-        "raw_scaling_efficiency": raw,
-        "pair_ratios": [3.6] * pairs,
-        "local_contention_pairs": contended or [False] * pairs,
-        "clean_epoch_pairs": clean if clean is not None else pairs,
-    }
+stability_reasons = _sc.stability_reasons
 
 
 # -- rc=3 stability gate ----------------------------------------------------
@@ -63,48 +49,3 @@ def test_supralinear_ratio_trips():
 def test_ratio_spread_trips():
     reasons = stability_reasons([5.0e8, 5.0e8], [1.9, 3.9])
     assert any("physical gate" in r for r in reasons)
-
-
-# -- headline keep-best policy ----------------------------------------------
-
-
-def test_ineligible_run_never_claims_even_with_best_raw():
-    # the round-4 failure mode: a contended 0.977 beating clean 0.941
-    dec, why = headline_decision(
-        _result(eligible=False, raw=0.977, contended=[True, False, False]),
-        _result(eligible=True, raw=0.941),
-    )
-    assert dec == "side" and "not headline-eligible" in why
-
-
-def test_ineligible_run_cannot_claim_empty_headline_either():
-    dec, _ = headline_decision(_result(eligible=False, raw=0.99), None)
-    assert dec == "side"
-
-
-def test_eligible_run_claims_empty_headline():
-    assert headline_decision(_result(raw=0.81), None) == ("claim", "")
-
-
-def test_eligible_keep_best_among_eligible_runs():
-    dec, why = headline_decision(
-        _result(raw=0.85), _result(raw=0.941)
-    )
-    assert dec == "side" and "0.941" in why
-    dec, _ = headline_decision(_result(raw=0.95), _result(raw=0.941))
-    assert dec == "claim"
-
-
-def test_eligible_run_replaces_ineligible_headline_regardless_of_value():
-    # an eligible 0.82 must displace a standing contended 0.977
-    dec, why = headline_decision(
-        _result(raw=0.82), _result(eligible=False, raw=0.977)
-    )
-    assert dec == "replace_ineligible" and "0.977" in why
-
-
-def test_pre_rule_headline_counts_as_ineligible():
-    # round-4 JSONs have no headline_eligible key at all
-    prior = {"raw_scaling_efficiency": 0.977}
-    dec, _ = headline_decision(_result(raw=0.82), prior)
-    assert dec == "replace_ineligible"

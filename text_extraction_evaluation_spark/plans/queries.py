@@ -173,14 +173,18 @@ _DRIVER_FIRST_FALLBACK = [
 ]
 
 
-def _find_correctness_records():
-    """Locate the committed CORRECTNESS_r*.json files by walking up from
-    this module (repo layout puts them at the repo root, two levels up);
-    returns [] when running from an installed wheel outside the repo."""
+def _find_correctness_records(start=None):
+    """Locate the committed CORRECTNESS_rNN.json files by walking up from
+    ``start`` (default: this module; repo layout puts them at the repo
+    root, two levels up); returns [] when running from an installed
+    wheel outside the repo. Only two-digit round names count, so a stray
+    scratch file such as CORRECTNESS_rscratch.json never reorders the
+    driver window."""
     import pathlib
 
-    for parent in pathlib.Path(__file__).resolve().parents:
-        recs = sorted(parent.glob("CORRECTNESS_r*.json"))
+    here = pathlib.Path(start or __file__).resolve()
+    for parent in [here, *here.parents]:
+        recs = sorted(parent.glob("CORRECTNESS_r[0-9][0-9].json"))
         if recs:
             return recs
     return []

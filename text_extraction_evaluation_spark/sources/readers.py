@@ -44,10 +44,9 @@ def get_spark(
         # variance that dwarfs the compute being measured
         builder = builder.config("spark.local.dir", "/dev/shm/spark-local")
     if extra_java_options:
-        # e.g. GC flags for bench runs (scripts/scaling_bench.py
-        # measured ParallelGC with capped threads most stable next to
-        # the Python worker pool); applies only when the JVM has not
-        # been launched yet
+        # e.g. GC flags for bench runs (ParallelGC with capped threads
+        # measured most stable next to the Python worker pool); applies
+        # only when the JVM has not been launched yet
         builder = builder.config(
             "spark.driver.extraJavaOptions", extra_java_options
         )
