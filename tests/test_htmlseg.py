@@ -54,7 +54,7 @@ def test_heading_flag():
 
 def test_select_in_dom_path():
     ps = segment("<select><option>pick one</option></select>")
-    assert any("select" in p.dom_path.split(".") for p in ps)
+    assert ps and all(p.in_select for p in ps)
 
 
 def test_malformed_unclosed_tags_tolerated():

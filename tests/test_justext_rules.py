@@ -1,20 +1,28 @@
 """Unit tests for context-free rules + context-sensitive smoothing
 (SURVEY.md Appendix A)."""
 
-from text_extraction_evaluation_spark.algo.htmlseg import Paragraph, segment
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from text_extraction_evaluation_spark.algo.htmlseg import Paragraph
 from text_extraction_evaluation_spark.algo.justext import (
+    BAD,
+    GOOD,
+    NEARGOOD,
+    SHORT,
     classify,
     classify_context_free,
     extract_text,
     revise_classification,
 )
-from text_extraction_evaluation_spark.algo.params import DEFAULT_PARAMS
+from text_extraction_evaluation_spark.algo.params import DEFAULT_PARAMS, JustextParams
 
 STOP = frozenset({"the", "a", "join", "hash", "row", "batch", "scan", "column"})
 
 
 def para(text, links=0, path="body.p", heading=False):
-    p = Paragraph(dom_path=path, heading=heading)
+    # ``path`` is a dotted dom path; the select rule reads its parts
+    p = Paragraph(in_select="select" in path.split("."), heading=heading)
     p.chunks = [text]
     p.chars_count_in_links = links
     return p
@@ -142,3 +150,101 @@ def test_extract_text_end_to_end():
     assert res.status == "ok"
     assert res.text == long_stopworded()
     assert res.n_good == 1
+
+
+# --- equivalence with the quadratic smoothing it replaced -------------------
+
+
+def _reference_get_neighbour(i, classes, ignore_neargood, inc, boundary):
+    """Verbatim copy of the pre-sweep ``_get_neighbour``."""
+    while i + inc != boundary:
+        i += inc
+        c = classes[i]
+        if c in (GOOD, BAD):
+            return c
+        if c == NEARGOOD and not ignore_neargood:
+            return c
+    return BAD
+
+
+def _reference_revise_classification(paragraphs, cf_classes, params):
+    """Verbatim copy of the ``_get_neighbour``-based smoothing, kept as
+    the oracle for the linear sweeps (the parity oracle shares algo/,
+    so it cannot catch a drift here)."""
+    _get_neighbour = _reference_get_neighbour
+    n = len(paragraphs)
+    classes = list(cf_classes)
+
+    if not params.no_headings:
+        for i, p in enumerate(paragraphs):
+            if not (p.heading and classes[i] == SHORT):
+                continue
+            j = i + 1
+            distance = 0
+            while j < n and distance <= params.max_heading_distance:
+                if classes[j] == GOOD:
+                    classes[i] = NEARGOOD
+                    break
+                distance += len(paragraphs[j].text)
+                j += 1
+
+    new_classes: dict[int, str] = {}
+    for i in range(n):
+        if classes[i] != SHORT:
+            continue
+        prev = _get_neighbour(i, classes, True, -1, -1)
+        nxt = _get_neighbour(i, classes, True, 1, n)
+        neighbours = {prev, nxt}
+        if neighbours == {GOOD}:
+            new_classes[i] = GOOD
+        elif neighbours == {BAD}:
+            new_classes[i] = BAD
+        # it is enough to have a neargood on the bad side:
+        elif (prev == BAD and _get_neighbour(i, classes, False, -1, -1) == NEARGOOD) or (
+            nxt == BAD and _get_neighbour(i, classes, False, 1, n) == NEARGOOD
+        ):
+            new_classes[i] = GOOD
+        else:
+            new_classes[i] = BAD
+    for i, c in new_classes.items():
+        classes[i] = c
+
+    for i in range(n):
+        if classes[i] != NEARGOOD:
+            continue
+        prev = _get_neighbour(i, classes, True, -1, -1)
+        nxt = _get_neighbour(i, classes, True, 1, n)
+        classes[i] = BAD if (prev == BAD and nxt == BAD) else GOOD
+
+    if not params.no_headings:
+        for i, p in enumerate(paragraphs):
+            if not (p.heading and classes[i] == BAD and cf_classes[i] != BAD):
+                continue
+            j = i + 1
+            distance = 0
+            while j < n and distance <= params.max_heading_distance:
+                if classes[j] == GOOD:
+                    classes[i] = GOOD
+                    break
+                distance += len(paragraphs[j].text)
+                j += 1
+
+    return classes
+
+
+_block = st.tuples(
+    st.sampled_from([GOOD, BAD, SHORT, NEARGOOD]),
+    st.booleans(),  # heading
+    st.integers(1, 120),  # text length
+)
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.lists(_block, max_size=80), st.booleans())
+def test_sweeps_equal_reference_smoothing(blocks, no_headings):
+    ps = [para("w" * length, heading=heading) for _, heading, length in blocks]
+    cf_classes = [cls for cls, _, _ in blocks]
+    params = JustextParams(no_headings=no_headings)
+    assert revise_classification(ps, cf_classes, params) == (
+        _reference_revise_classification(ps, cf_classes, params)
+    )

@@ -2,6 +2,9 @@
 
 import math
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from text_extraction_evaluation_spark.algo.metrics import (
     bow_matched,
     lcs_matched,
@@ -59,3 +62,30 @@ def test_unicode_nfc_normalization():
     # e + combining acute vs precomposed é must match
     s = score_texts("café", "café")
     assert s.f1 == 1.0
+
+
+def _lcs_dp(a, b):
+    """Textbook O(n*m) LCS length, the independent reference."""
+    prev = [0] * (len(b) + 1)
+    for x in a:
+        cur = [0]
+        for j, y in enumerate(b):
+            cur.append(prev[j] + 1 if x == y else max(prev[j + 1], cur[j]))
+        prev = cur
+    return prev[-1]
+
+
+_tokens = st.lists(st.sampled_from(["a", "b", "c", "d"]), max_size=40)
+
+
+@settings(max_examples=500, deadline=None)
+@given(_tokens, _tokens)
+def test_lcs_equals_dp_reference(a, b):
+    assert lcs_matched(a, b) == _lcs_dp(a, b)
+    assert lcs_matched(b, a) == _lcs_dp(a, b)
+
+
+def test_lcs_counts_what_matching_blocks_miss():
+    # matching blocks take the first longest block ("a" ~ "a") and then
+    # find nothing on either side of it: 1; the LCS is "b a": 2
+    assert lcs_matched(["a", "b", "a"], ["b", "c", "a"]) == 2

@@ -25,8 +25,12 @@ Semantics:
 * a new paragraph starts at the open OR close of any block-level tag
   (``PARAGRAPH_TAGS``) and at the second of two consecutive ``<br>``;
 * character data inside ``<a>`` accrues ``chars_count_in_links``;
-* each paragraph records its dom path at creation time and whether
-  any enclosing element is ``h1``-``h6`` (heading flag);
+* each paragraph records, at creation time, whether any enclosing
+  element is ``select`` (select flag) and whether any is ``h1``-``h6``
+  (heading flag). A tag name with dots counts as ``select`` when one of
+  its dot-separated parts is ``select`` (``<a.select>``), which keeps
+  the flag equal to the dom-path rule it replaced, ``"select" in
+  ".".join(stack).split(".")``;
 * paragraph text is whitespace-normalized; entity references decoded;
 * malformed markup is tolerated: stray close tags are ignored,
   unclosed elements are popped to the nearest matching open tag,
@@ -78,7 +82,7 @@ def _normalize(text: str) -> str:
 class Paragraph:
     """One segmented block, before classification."""
 
-    dom_path: str
+    in_select: bool
     heading: bool
     chunks: list[str] = field(default_factory=list)
     chars_count_in_links: int = 0
@@ -115,14 +119,16 @@ class _SegmenterCore:
     """Tokenizer-independent event logic (the actual jusText
     segmentation semantics). Both front-ends drive this.
 
-    Perf: open-tag membership and the heading flag are maintained
-    incrementally (_open_counts / _heading_depth) so end-tag handling
-    and paragraph creation are O(1) instead of O(stack depth) — the
-    event layer is on the extraction kernel's hot path."""
+    Perf: open-tag membership and the select and heading flags are
+    maintained incrementally (_open_counts / _select_depth /
+    _heading_depth) so end-tag handling and paragraph creation are O(1)
+    instead of O(stack depth) — the event layer is on the extraction
+    kernel's hot path, and a deep unclosed DOM would otherwise make
+    segmentation quadratic."""
 
     __slots__ = ("stack", "paragraphs", "_cur", "_skip_depth",
                  "_link_depth", "_br_pending", "_open_counts",
-                 "_heading_depth")
+                 "_select_depth", "_heading_depth")
 
     def __init__(self) -> None:
         self.stack: list[str] = []
@@ -132,6 +138,7 @@ class _SegmenterCore:
         self._link_depth = 0
         self._br_pending = False
         self._open_counts: dict[str, int] = {}
+        self._select_depth = 0
         self._heading_depth = 0
 
     # -- stack maintenance ---------------------------------------------------
@@ -139,6 +146,9 @@ class _SegmenterCore:
         self.stack.append(tag)
         c = self._open_counts
         c[tag] = c.get(tag, 0) + 1
+        # split only dotted names: a split per push costs ~10% per doc
+        if tag == "select" or ("." in tag and "select" in tag.split(".")):
+            self._select_depth += 1
         if tag in _HEADING_TAGS:
             self._heading_depth += 1
 
@@ -152,8 +162,9 @@ class _SegmenterCore:
 
     def _ensure(self) -> Paragraph:
         if self._cur is None:
-            path = ".".join(self.stack)
-            self._cur = Paragraph(dom_path=path, heading=self._heading_depth > 0)
+            self._cur = Paragraph(
+                in_select=self._select_depth > 0, heading=self._heading_depth > 0
+            )
         return self._cur
 
     # -- events ----------------------------------------------------------
@@ -214,6 +225,8 @@ class _SegmenterCore:
         while self.stack:
             t = self.stack.pop()
             c[t] -= 1
+            if t == "select" or ("." in t and "select" in t.split(".")):
+                self._select_depth -= 1
             if t in _HEADING_TAGS:
                 self._heading_depth -= 1
             if t == tag:
@@ -272,12 +285,16 @@ class _HtmlParserSegmenter(HTMLParser):
 
 # A tag: optional '/', a name, then attribute soup where '>' inside
 # quotes does not terminate the tag. Comments/decls/PIs handled first.
+# The attribute alternatives start with disjoint characters, so the soup
+# parses one way only and possessive quantifiers match the same tags;
+# without them a tag left open at EOF backtracks over every split of
+# its `[^>"']` runs, exponential in the length of the tail.
 _TAG_RE = re.compile(
     r"""<(?:
         (?P<comment>!--)
       | [!?][^>]*>
       | (?P<end>/)?(?P<tag>[a-zA-Z][^\t\n\r\f\ />\x00]*)   # stdlib tagfind-compatible
-        (?P<attrs>(?:[^>"']+|"[^"]*"|'[^']*')*)>
+        (?P<attrs>(?:[^>"']++|"[^"]*+"|'[^']*+')*+)>
     )""",
     re.X,
 )
@@ -356,18 +373,15 @@ def segment(html_text: str, engine: str = "fast") -> list[Paragraph]:
 
     ``engine='fast'`` (default) and ``engine='stdlib'`` produce
     identical output (fuzz-tested); the fast scanner is ~3x quicker.
+    A scanner failure propagates: the extractors turn it into
+    ``status='parse_error'`` instead of returning truncated text.
     """
     core = _SegmenterCore()
-    try:
-        if engine == "stdlib":
-            parser = _HtmlParserSegmenter(core)
-            parser.feed(html_text)
-            parser.close()
-        else:
-            _fast_scan(html_text, core)
-    except Exception:
-        # never let a pathological page kill a whole Arrow batch:
-        # return what was segmented so far.
-        pass
+    if engine == "stdlib":
+        parser = _HtmlParserSegmenter(core)
+        parser.feed(html_text)
+        parser.close()
+    else:
+        _fast_scan(html_text, core)
     core.finish()
     return core.paragraphs

@@ -69,7 +69,7 @@ def classify_context_free(
         cls = BAD
     elif "\xa9" in text or "&copy" in text:
         cls = BAD
-    elif "select" in p.dom_path.split("."):
+    elif p.in_select:
         cls = BAD
     elif length < params.length_low:
         cls = BAD if p.chars_count_in_links > 0 else SHORT
@@ -82,23 +82,26 @@ def classify_context_free(
     return cls, link_density, swd
 
 
-def _get_neighbour(
-    i: int,
-    classes: list[str],
-    ignore_neargood: bool,
-    inc: int,
-    boundary: int,
-) -> str:
-    """Nearest decisive neighbour class; boundary defaults to 'bad'
-    (exactly the public justext ``get_neighbour`` semantics)."""
-    while i + inc != boundary:
-        i += inc
-        c = classes[i]
-        if c in (GOOD, BAD):
-            return c
-        if c == NEARGOOD and not ignore_neargood:
-            return c
-    return BAD
+_GOOD_BAD = frozenset({GOOD, BAD})
+_GOOD_BAD_NEARGOOD = frozenset({GOOD, BAD, NEARGOOD})
+
+
+def _nearest_before(classes: list[str], decisive: frozenset[str]) -> list[str]:
+    """``out[i]`` = class of the nearest ``j < i`` whose class is in
+    ``decisive``; the boundary counts as 'bad' (the public justext
+    ``get_neighbour`` semantics). One sweep, so the smoothing passes
+    are linear in the paragraph count."""
+    out = []
+    last = BAD
+    for c in classes:
+        out.append(last)
+        if c in decisive:
+            last = c
+    return out
+
+
+def _nearest_after(classes: list[str], decisive: frozenset[str]) -> list[str]:
+    return _nearest_before(classes[::-1], decisive)[::-1]
 
 
 def revise_classification(
@@ -129,33 +132,35 @@ def revise_classification(
                 distance += len(paragraphs[j].text)
                 j += 1
 
-    new_classes: dict[int, str] = {}
-    for i in range(n):
-        if classes[i] != SHORT:
+    # Short pass: every SHORT is decided from the classes as they were
+    # before the pass, so both neighbour directions are precomputed.
+    prev_gb = _nearest_before(classes, _GOOD_BAD)
+    next_gb = _nearest_after(classes, _GOOD_BAD)
+    prev_gbn = _nearest_before(classes, _GOOD_BAD_NEARGOOD)
+    next_gbn = _nearest_after(classes, _GOOD_BAD_NEARGOOD)
+    for i, c in enumerate(classes):
+        if c != SHORT:
             continue
-        prev = _get_neighbour(i, classes, True, -1, -1)
-        nxt = _get_neighbour(i, classes, True, 1, n)
-        neighbours = {prev, nxt}
-        if neighbours == {GOOD}:
-            new_classes[i] = GOOD
-        elif neighbours == {BAD}:
-            new_classes[i] = BAD
+        prev, nxt = prev_gb[i], next_gb[i]
+        if prev == nxt:
+            classes[i] = prev
         # it is enough to have a neargood on the bad side:
-        elif (prev == BAD and _get_neighbour(i, classes, False, -1, -1) == NEARGOOD) or (
-            nxt == BAD and _get_neighbour(i, classes, False, 1, n) == NEARGOOD
+        elif (prev == BAD and prev_gbn[i] == NEARGOOD) or (
+            nxt == BAD and next_gbn[i] == NEARGOOD
         ):
-            new_classes[i] = GOOD
+            classes[i] = GOOD
         else:
-            new_classes[i] = BAD
-    for i, c in new_classes.items():
-        classes[i] = c
+            classes[i] = BAD
 
-    for i in range(n):
-        if classes[i] != NEARGOOD:
+    # Neargood pass: only good/bad/neargood remain and every neargood to
+    # the left is already decided, so the left neighbour is classes[i-1];
+    # the right neighbours are not yet rewritten, so they are precomputed.
+    next_gb = _nearest_after(classes, _GOOD_BAD)
+    for i, c in enumerate(classes):
+        if c != NEARGOOD:
             continue
-        prev = _get_neighbour(i, classes, True, -1, -1)
-        nxt = _get_neighbour(i, classes, True, 1, n)
-        classes[i] = BAD if (prev == BAD and nxt == BAD) else GOOD
+        prev = classes[i - 1] if i else BAD
+        classes[i] = BAD if (prev == BAD and next_gb[i] == BAD) else GOOD
 
     if not params.no_headings:
         for i, p in enumerate(paragraphs):
@@ -230,7 +235,7 @@ def extract_text(
     try:
         paragraphs = segment(html_text)
         classified = classify(paragraphs, lang, params, stoplists)
-    except Exception as exc:  # pragma: no cover - defensive
+    except Exception as exc:
         return ExtractionResult("", [], 0, 0, STATUS_PARSE_ERROR, repr(exc))
 
     good = [cp.text for cp in classified if cp.class_final == GOOD]

@@ -71,7 +71,7 @@ def extract_text_density(html_text: str) -> ExtractionResult:
     try:
         paragraphs = segment(html_text)
         classes = classify_density(paragraphs)
-    except Exception as exc:  # pragma: no cover - defensive
+    except Exception as exc:
         return ExtractionResult("", [], 0, 0, STATUS_PARSE_ERROR, repr(exc))
     good = [p.text for p, c in zip(paragraphs, classes) if c == CONTENT]
     text = "\n\n".join(good)
